@@ -94,21 +94,6 @@ SELECT id AS {id_col}, {fp_terms} AS simhash FROM sums
 """.strip()
 
 
-def simhash_dup_groups(
-    df: DataFrame, id_col: str, text_col: str, n_bits: int = DEFAULT_BITS
-) -> DataFrame:
-    """Documents sharing an identical fingerprint (Hamming distance 0
-    shortcut). For distance ≤ k banding, split the fingerprint into
-    k+1 blocks and bucket-join on each block (Manku's construction) —
-    see ``simhash_band_pairs``."""
-    fp = simhash(df, id_col, text_col, n_bits)
-    return (
-        fp.groupBy("simhash")
-        .agg(F.min(id_col).alias("canonical_id"), F.count(F.lit(1)).alias("n_docs"))
-        .filter(F.col("n_docs") > 1)
-    )
-
-
 def simhash_band_pairs(
     df: DataFrame,
     id_col: str,

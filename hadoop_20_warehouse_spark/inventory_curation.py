@@ -424,26 +424,19 @@ def q_knn_ivf_trained(spark: SparkSession, sf_dir: str) -> DataFrame:
     row the oracle can verify exactly (see block comment above).  The
     *search* path the trained table feeds (ivf_topk(cents=...)) reuses
     the oracle-checked knn_ivf plan unchanged."""
-    from hadoop_20_warehouse_spark.similarity.ivf import (
-        _centroid_array,
-        _scorer,
-        train_centroids,
-    )
-    from hadoop_20_warehouse_spark.similarity.knn import _norm
+    from hadoop_20_warehouse_spark.similarity.assign import assign_topn
+    from hadoop_20_warehouse_spark.similarity.ivf import train_centroids
 
     emb = load_table(spark, sf_dir, "embeddings")
     cents = train_centroids(
         emb, "vec_id", "embedding", k=_IVF_TRAINED_K, iters=3
     )
-    vecs = emb.select("vec_id", "embedding", _norm(F.col("embedding")).alias("vn"))
-    # row-local rank-1 assignment (array-HOF argmax over the broadcast
-    # centroid array — similarity/ivf.py r5 rewrite, no corpus shuffle)
-    assign = vecs.crossJoin(F.broadcast(_centroid_array(cents))).select(
-        "vec_id",
-        F.array_min(
-            F.transform(F.col("cs"), _scorer(F.col("embedding"), F.col("vn")))
-        )["cid"].alias("centroid_id"),
-    )
+    # row-local rank-1 assignment (one GEMM per Arrow batch against the
+    # broadcast centroid matrix, no corpus shuffle).  Counting its
+    # OUTPUT rows keeps the assignment in the executed plan: the
+    # mapInPandas node is opaque to Catalyst, so it cannot be pruned
+    # the way a column-projection argmin would be.
+    assign = assign_topn(emb, cents, nprobe=1)
     n_vec = assign.agg(F.count(F.lit(1)).alias("n_vectors"))
     seeds = (
         emb.select("vec_id", F.md5(F.col("vec_id").cast("string")).alias("h"))

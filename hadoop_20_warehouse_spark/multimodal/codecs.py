@@ -226,18 +226,6 @@ def png_chunk(ctype: bytes, data: bytes) -> bytes:
     )
 
 
-def _paeth(a: int, b: int, c: int) -> int:
-    """Paeth predictor (png-3 §9.4): nearest of left/up/up-left to
-    the linear gradient a+b-c, ties broken left, up, up-left."""
-    p = a + b - c
-    pa, pb, pc = abs(p - a), abs(p - b), abs(p - c)
-    if pa <= pb and pa <= pc:
-        return a
-    if pb <= pc:
-        return b
-    return c
-
-
 def _unfilter(raw: bytes, h: int, stride: int, bpp: int) -> np.ndarray:
     """Reverse the per-scanline filters → (h, stride) uint8.
 

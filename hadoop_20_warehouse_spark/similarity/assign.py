@@ -1,22 +1,20 @@
-"""Batched (GEMM) centroid assignment — the large-k twin of the
-broadcast-HOF argmin in ``similarity.ivf``.
+"""Batched (GEMM) centroid assignment — the one assign kernel of the
+vector family.
 
 Every ANN/SemDeDup operator in this library quantizes vectors by
 scoring them against a broadcast centroid table and keeping the
-``nprobe`` nearest by rounded cosine (``ivf._scorer``).  The HOF form
-(array_min / array_sort over transform) is JVM-side and shuffle-free,
-but higher-order array functions run as INTERPRETED expressions — the
-repo's own measured finding (PLANS.md codegen notes) — so its O(N·k·d)
-constant factor dominates once k grows toward the cell counts a 100 TB
-deployment runs (SemDeDup's paper-scale ~50k clusters).  Real
-deployments batch this stage as a matrix multiply; this module is that
-path: ``mapInPandas`` over Arrow batches, ONE numpy GEMM per batch
-against the broadcast centroid matrix, still shuffle-free and
-embarrassingly parallel.
+``nprobe`` nearest by rounded cosine (6 decimals) with centroid-id
+tiebreaks.  This module is that stage: ``mapInPandas`` over Arrow
+batches, ONE numpy GEMM per batch against the broadcast centroid
+matrix, shuffle-free and embarrassingly parallel.  (Higher-order array
+functions would run as INTERPRETED expressions — the repo's measured
+finding, PLANS.md codegen notes — so a per-row argmin's O(N·k·d)
+constant grows with k; the batched form won at every measured k.)
 
 Bit-identical by construction — the load-bearing property (the DuckDB
 oracles hash the downstream results, so the assign must reproduce the
-HOF argmin EXACTLY, same rounding and same tiebreaks):
+oracle's ``round(cosine, 6) DESC, centroid_id ASC`` ranking EXACTLY,
+same rounding and same tiebreaks):
 
 - float32 inputs widen to float64 exactly; float64 inputs pass
   through — every elementwise product/divide is then the same IEEE
@@ -35,20 +33,10 @@ HOF argmin EXACTLY, same rounding and same tiebreaks):
   the banded candidates only, rounded with the same HALF_UP-on-
   shortest-decimal rule as Spark's ``round()`` (java.math.BigDecimal
   .valueOf == Double.toString == Python ``repr``), sorted by
-  (-rounded, centroid_id) — byte-for-byte the ``ivf._scorer``
-  ordering, NULL cosines (zero norms) last.
-- A property test (tests/test_similarity_dedup.py) pins GEMM == HOF
-  frame equality on real float32 embeddings, synthetic doubles,
-  exact-duplicate vectors, and zero vectors.
-
-Crossover: measured round 11 (PLANS.md) at N=2,000 (sf0.1 embeddings)
-and N=20,000 (synthetic doubles), k ∈ [8, 2048]: the GEMM path wins at
-EVERY measured point (k=8/N=2k: 0.46s vs 1.05s; k=320/N=20k: 0.48s vs
-4.0s; k=2048/N=20k: 0.91s vs 27.7s — the HOF cost is ~linear in k, the
-GEMM cost is flat until the matmul term finally surfaces).  The
-dispatch threshold keeps HOF only below k=16, where the two are within
-session noise and HOF avoids the plan-build centroid collect and the
-Python worker entirely.
+  (-rounded, centroid_id), NULL cosines (zero norms) last.
+- The DuckDB oracles pin the result on real float32 embeddings and on
+  an adversarial frame of exact-duplicate vectors, zero vectors and
+  ±1e-9 ties (tests/test_similarity_dedup.py).
 
 Reference lineage: the assignment stage itself has no reference
 counterpart (vector ops are an extension); the batch-the-inner-loop
@@ -65,11 +53,6 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.types import ArrayType, DoubleType, IntegerType, StructField, StructType
 
-# Measured HOF-vs-GEMM dispatch point (PLANS.md r11): GEMM wins at
-# every measured k ≥ 8, but below 16 centroids the margin is session
-# noise and HOF skips the plan-build collect + Python worker.
-GEMM_ASSIGN_MIN_K = 16
-
 # Decision band on the cosine scale: 1e-6 covers the 6-decimal
 # rounding granularity; the error term dominates the GEMM
 # reassociation bound (≈ 2·d·eps on the normalized cosine, eps =
@@ -81,13 +64,9 @@ def _band(d: int) -> float:
     return 1e-6 + max(1e-12, 8.0 * float(d) * 2.3e-16)
 
 
-# Backward-compat alias at the repo's 64-dim convention (imported by
-# older call sites/tests); new code should call _band(d).
-_BAND = _band(64)
-
-# Sort key for NULL cosines (zero norm): the HOF scorer coalesces the
-# NULL negsim to +inf so those candidates rank LAST with centroid-id
-# tiebreaks; any finite -rounded key is ≤ 1e6 so 2^62 is safely after.
+# Sort key for NULL cosines (zero norm): those candidates rank LAST
+# with centroid-id tiebreaks (the oracle's DESC NULLS LAST); any finite
+# -rounded key is ≤ 1e6 so 2^62 is safely after.
 _NULL_KEY = 1 << 62
 
 
@@ -114,8 +93,7 @@ def collect_centroid_matrix(cents: DataFrame):
     """Collect a (centroid_id, cv, cn) table into numpy arrays for the
     broadcast closure.  The table is O(k) rows by construction
     (``ivf.centroids``/``train_centroids`` cap it), so the collect is
-    the same bounded driver hop the HOF path's broadcast array row
-    takes.  ``cn`` is reused from the Spark-computed column — not
+    a bounded driver hop.  ``cn`` is reused from the Spark-computed column — not
     recomputed — so the denominator is the identical double."""
     import numpy as np
 
@@ -149,12 +127,12 @@ def assign_topn(
 ) -> DataFrame:
     """(id, centroid_id, crank[, vec][, resid]) — each vector's
     ``nprobe`` nearest centroids by rounded cosine with centroid-id
-    tiebreaks, bit-identical to ``ivf._cells``'s HOF argmin (see
-    module docstring for the equality argument).
+    tiebreaks, bit-identical to the oracles' ``cellranks`` (see module
+    docstring for the equality argument).
 
     ``include_resid`` appends ``resid`` = v − centroid per emitted row
-    (the IVF-PQ residual, float64 — same as the HOF path's zip_with of
-    double casts); ``include_vec`` carries the input vector through
+    (the IVF-PQ residual, float64 — the oracle's double-cast list
+    difference); ``include_vec`` carries the input vector through
     (the train_centroids loop shape).
 
     Scale: one GEMM per Arrow batch against the broadcast centroid

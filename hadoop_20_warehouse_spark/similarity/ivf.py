@@ -19,8 +19,9 @@ centroid count n/stride, i.e. O(n²) assignment — fixed per VERDICT.)
 Scale design (the 100 TB path):
 - The centroid table is exactly ``num_centroids`` rows (smallest-k by
   md5(id): a map-side partial top-k, shuffle of k rows per partition)
-  and **broadcast**; both assignment and probe selection are
-  broadcast joins — no shuffle of the corpus for quantization.
+  and **broadcast**; assignment and probe selection are one numpy
+  GEMM per Arrow batch against that matrix (``similarity.assign``) —
+  no shuffle of the corpus for quantization.
 - The only wide op is the equi-join probe→cell on ``centroid_id``:
   shuffle volume is |corpus| + |queries|·nprobe rows, vs the cross
   join's |corpus|·|queries| pairs.
@@ -66,57 +67,12 @@ def centroids(
     )
 
 
-def _centroid_array(cents: DataFrame) -> DataFrame:
-    """The centroid table folded into ONE row carrying an array of
-    (centroid_id, cv, cn) structs, sorted by centroid_id — the shape
-    that makes quantization row-local: broadcast this single row and
-    every vector scores all k centroids inside one projection, no
-    per-vector explode, no window, no shuffle."""
-    return cents.agg(
-        F.array_sort(
-            F.collect_list(F.struct("centroid_id", "cv", "cn"))
-        ).alias("cs")
-    )
-
-
-def _scorer(vec, vnorm, include_cv: bool = False):
-    """Per-centroid scoring lambda for the array HOFs: maps a centroid
-    struct to (negsim, cid) so array_min/array_sort order by rounded
-    cosine DESC with centroid-id ASC tiebreaks — identical to the old
-    row_number(desc csim, asc centroid_id) ranking.
-
-    ``include_cv=True`` appends the centroid's VECTOR as a third
-    struct field so an argmin caller gets the winning centroid's cv
-    back from the same comparison (struct ordering never reaches it:
-    (negsim, cid) is already unique) — the IVF-PQ residual path
-    (similarity/pq.py) needs exactly this, and a single scorer keeps
-    the NULL-cosine/+inf tiebreak subtlety in ONE place."""
-
-    def score(c):
-        # NULL cosine (zero norm) → +inf so it sorts LAST under min /
-        # ascending sort, matching the old desc(csim) NULLS-LAST
-        # ranking exactly (a bare NULL struct field would sort FIRST)
-        fields = [
-            F.coalesce(
-                -F.round(_safe_div(_dot(vec, c["cv"]), vnorm * c["cn"]), 6),
-                F.lit(float("inf")),
-            ).alias("negsim"),
-            c["centroid_id"].alias("cid"),
-        ]
-        if include_cv:
-            fields.append(c["cv"].alias("cv"))
-        return F.struct(*fields)
-
-    return score
-
-
 def train_centroids(
     corpus: DataFrame,
     id_col: str = "vec_id",
     vec_col: str = "embedding",
     k: int = 16,
     iters: int = 3,
-    method: str | None = None,
 ) -> DataFrame:
     """Lloyd-trained centroid table (k-means on cosine assignment,
     per-dimension mean update) — the trained quantizer the sampled
@@ -133,38 +89,19 @@ def train_centroids(
 
     Returns (centroid_id, cv, cn) like ``centroids()`` — plug-in
     compatible with ``ivf_topk(cents=...)``."""
-    from hadoop_20_warehouse_spark.similarity import assign as ASSIGN
+    from hadoop_20_warehouse_spark.similarity.assign import assign_topn
 
-    if method is None:
-        method = "gemm" if k >= ASSIGN.GEMM_ASSIGN_MIN_K else "hof"
-    init = centroids(corpus, id_col, vec_col, k)
-    vecs = corpus.select(
-        F.col(id_col).alias("_vid"),
-        F.col(vec_col).alias("_v"),
-        _norm(F.col(vec_col)).alias("_vn"),
-    )
-    cents = init
+    vecs = corpus.select(F.col(id_col).alias("_vid"), F.col(vec_col).alias("_v"))
+    cents = centroids(corpus, id_col, vec_col, k)
     for _ in range(iters):
-        # rank-1 assignment is ROW-LOCAL: the k centroids travel as ONE
-        # array row (broadcast), and each vector takes the argmax with
-        # array HOFs — no exchange of the |corpus|×k sims frame (the r5
-        # rewrite; the prior window-over-_vid shuffled corpus×k rows
-        # per iteration).  min(struct(-csim, cid)) == the old
-        # row_number(desc csim, asc cid) tiebreak exactly.  Above the
-        # measured k crossover the same assignment runs as one numpy
-        # GEMM per Arrow batch (similarity.assign — bit-identical).
-        if method == "gemm":
-            members = ASSIGN.assign_topn(
-                vecs, cents, id_col="_vid", vec_col="_v", nprobe=1,
-                include_vec=True,
-            ).select("centroid_id", "_v")
-        else:
-            members = vecs.crossJoin(F.broadcast(_centroid_array(cents))).select(
-                F.array_min(
-                    F.transform(F.col("cs"), _scorer(F.col("_v"), F.col("_vn")))
-                )["cid"].alias("centroid_id"),
-                "_v",
-            )
+        # rank-1 assignment is ROW-LOCAL: one numpy GEMM per Arrow
+        # batch against the broadcast centroid matrix
+        # (similarity.assign) — no exchange of the |corpus|×k sims
+        # frame
+        members = assign_topn(
+            vecs, cents, id_col="_vid", vec_col="_v", nprobe=1,
+            include_vec=True,
+        ).select("centroid_id", "_v")
         dims = members.select(
             "centroid_id", F.posexplode(F.col("_v")).alias("pos", "x")
         )
@@ -189,31 +126,13 @@ def _cells(
     num_centroids: int,
     nprobe: int,
     cents: DataFrame | None = None,
-    method: str | None = None,
     carry_vec: bool = False,
 ) -> DataFrame:
     """(id, centroid_id, crank): each vector's ``nprobe`` nearest
     centroids by rounded cosine, centroid-id tiebreak. Computed ONCE —
     callers derive both the rank-1 assignment and the probe set from
-    this frame.
-
-    Two bit-identical physical strategies, both shuffle-free:
-
-    - ``"hof"`` — ROW-LOCAL array HOFs (r5 rewrite): the k centroids
-      travel as ONE broadcast array row; each vector sorts its k
-      scores and explodes only the ``nprobe`` survivors.  JVM-side but
-      INTERPRETED (HOFs break whole-stage codegen — the repo's
-      measured finding), so the O(N·k·d) constant factor grows with k.
-      Wins at small k by avoiding the Python worker round-trip.
-    - ``"gemm"`` — Arrow-batched numpy matmul against the broadcast
-      centroid matrix (``similarity.assign``), the plan a paper-scale
-      cell count (SemDeDup's ~50k clusters) needs.  Wins above
-      ``assign.GEMM_ASSIGN_MIN_K`` centroids (measured crossover,
-      PLANS.md r11).
-
-    ``method=None`` auto-picks by ``num_centroids``; results are
-    bit-identical either way (property-tested), so the choice is pure
-    physical planning.
+    this frame.  Shuffle-free: one Arrow-batched numpy GEMM per batch
+    against the broadcast centroid matrix (``similarity.assign``).
 
     ``carry_vec=True`` (r19 optimization round, guide §2.3 / §8
     "shuffle keys AND the payload once"): the vector and its norm
@@ -221,51 +140,21 @@ def _cells(
     compute similarities directly at the bucket join instead of
     re-attaching vectors with two corpus-scale post-candidate joins
     (the minhash signature carry-through applied to IVF)."""
+    from hadoop_20_warehouse_spark.similarity.assign import assign_topn
+
     if cents is None:
         cents = centroids(corpus, id_col, vec_col, num_centroids)
-    from hadoop_20_warehouse_spark.similarity import assign as ASSIGN
-
-    if method is None:
-        method = (
-            "gemm" if num_centroids >= ASSIGN.GEMM_ASSIGN_MIN_K else "hof"
+    out = assign_topn(
+        corpus, cents, id_col=id_col, vec_col=vec_col, nprobe=nprobe,
+        include_vec=carry_vec,
+    )
+    if carry_vec:
+        out = out.select(
+            F.col(id_col), "centroid_id", "crank",
+            F.col(vec_col).alias("vec"),
+            _norm(F.col(vec_col)).alias("vn"),
         )
-    if method == "gemm":
-        out = ASSIGN.assign_topn(
-            corpus, cents, id_col=id_col, vec_col=vec_col, nprobe=nprobe,
-            include_vec=carry_vec,
-        )
-        if carry_vec:
-            out = out.select(
-                F.col(id_col), "centroid_id", "crank",
-                F.col(vec_col).alias("vec"),
-                _norm(F.col(vec_col)).alias("vn"),
-            )
-        return out
-    vecs = corpus.select(
-        F.col(id_col), F.col(vec_col), _norm(F.col(vec_col)).alias("vn")
-    )
-    carried = ([F.col(vec_col).alias("vec"), F.col("vn")]
-               if carry_vec else [])
-    top = vecs.crossJoin(F.broadcast(_centroid_array(cents))).select(
-        F.col(id_col),
-        F.slice(
-            F.array_sort(
-                F.transform(F.col("cs"), _scorer(F.col(vec_col), F.col("vn")))
-            ),
-            1,
-            nprobe,
-        ).alias("probes"),
-        *carried,
-    )
-    return top.select(
-        F.col(id_col), F.posexplode(F.col("probes")).alias("pos", "p"),
-        *(["vec", "vn"] if carry_vec else []),
-    ).select(
-        id_col,
-        F.col("p")["cid"].alias("centroid_id"),
-        (F.col("pos") + 1).cast("int").alias("crank"),
-        *(["vec", "vn"] if carry_vec else []),
-    )
+    return out
 
 
 def ivf_topk(
@@ -276,7 +165,6 @@ def ivf_topk(
     num_centroids: int = DEFAULT_NUM_CENTROIDS,
     nprobe: int = DEFAULT_NPROBE,
     cents: DataFrame | None = None,
-    method: str | None = None,
 ) -> DataFrame:
     """ANN top-k with every corpus vector as query: (query_id,
     neighbor_id, sim, rank); candidates = vectors assigned (rank-1
@@ -307,7 +195,7 @@ def ivf_topk(
     cells = persist_generation(
         "ivf_cells",
         _cells(corpus, id_col, vec_col, num_centroids, nprobe, cents,
-               method, carry_vec=True),
+               carry_vec=True),
     )
     assign = cells.filter(F.col("crank") == 1).select(
         F.col(id_col).alias("neighbor_id"), "centroid_id",

@@ -2,11 +2,11 @@
 
 Two strategies:
 
-- ``brute_force_topk``: exact cosine top-k — cross join queries ×
-  corpus, dot/norm folded JVM-side (``aggregate``/``zip_with``), then
-  per-query top-k via window rank. The baseline; exact but
-  O(|Q|·|corpus|). Scales by keeping |Q| bounded per pass and
-  broadcasting the query set.
+- ``brute_force_topk``: exact cosine top-k — corpus batches score
+  against the broadcast query matrix (one numpy GEMM per Arrow batch,
+  similarity/scores.brute_topk), then per-query top-k via window rank.
+  The baseline; exact but O(|Q|·|corpus|). Scales by keeping |Q|
+  bounded per pass.
 - ``lsh_topk``: random-hyperplane (sign) LSH — b pseudo-random
   hyperplanes derived from md5 (deterministic, oracle-reproducible)
   give each vector a b-bit bucket; candidates = same-bucket pairs,
@@ -77,64 +77,27 @@ def brute_force_topk(
     id_col: str = "vec_id",
     vec_col: str = "embedding",
     k: int = 10,
-    method: str | None = None,
 ) -> DataFrame:
     """Exact cosine top-k: (query_id, neighbor_id, sim, rank).
 
-    The query set is broadcast (bounded per pass); rank is over
-    (round(sim, 6) DESC, neighbor_id ASC) so ties — including exact
-    duplicate embeddings — resolve identically everywhere.
-
-    Two bit-identical strategies (property-tested): ``"gemm"``
-    (default) streams corpus batches against the broadcast query
+    Rank is over (round(sim, 6) DESC, neighbor_id ASC) so ties —
+    including exact duplicate embeddings — resolve identically
+    everywhere.  Corpus batches stream against the broadcast query
     matrix — one matmul per batch, per-query tie-band pruning, exact
     rounded sims, then a window over O(partitions·|Q|·k) candidates
-    (similarity/scores.brute_topk; measured 2.5-3x at sf0.1 and the
-    gap grows with |Q|·N — this scorer prices every recall@k eval);
-    ``"hof"`` is the crossJoin + interpreted-fold executable
-    specification.
+    (similarity/scores.brute_topk; this scorer prices every recall@k
+    eval).
 
-    NOTE: the default gemm path COLLECTS the query set to the driver
-    before broadcasting (scores.brute_topk enforces a 1M-row cap and
-    raises above it); the hof path broadcasts without a driver-side
-    materialization — pick it (or chunk the queries into passes) when
-    the query frame is large.
+    NOTE: the query set is COLLECTED to the driver before broadcasting
+    (scores.brute_topk enforces a 1M-row cap and raises above it);
+    for a larger query frame call ``scores.brute_topk(chunked=True)``,
+    which splits the queries into md5-bucketed passes that each stay
+    under the cap.
     """
     from hadoop_20_warehouse_spark.session import scatter
+    from hadoop_20_warehouse_spark.similarity.scores import brute_topk
 
-    corpus = scatter(corpus)
-    if method is None or method == "gemm":
-        from hadoop_20_warehouse_spark.similarity.scores import brute_topk
-
-        return brute_topk(corpus, queries, id_col, vec_col, k)
-    # norms precomputed once per row (not per pair — at |Q|·|corpus|
-    # pairs that's the difference between 1 and 3 vector folds per pair)
-    q = queries.select(
-        F.col(id_col).alias("query_id"),
-        F.col(vec_col).alias("qv"),
-        _norm(F.col(vec_col)).alias("qn"),
-    )
-    c = corpus.select(
-        F.col(id_col).alias("neighbor_id"),
-        F.col(vec_col).alias("nv"),
-        _norm(F.col(vec_col)).alias("nn"),
-    )
-    sims = (
-        c.crossJoin(F.broadcast(q))
-        .filter(F.col("neighbor_id") != F.col("query_id"))
-        .select(
-            "query_id",
-            "neighbor_id",
-            F.round(
-                _safe_div(_dot(F.col("qv"), F.col("nv")), F.col("qn") * F.col("nn")), 6
-            ).alias("sim"),
-        )
-    )
-    w = Window.partitionBy("query_id").orderBy(F.desc("sim"), F.asc("neighbor_id"))
-    return (
-        sims.withColumn("rank", F.row_number().over(w).cast("long"))
-        .filter(F.col("rank") <= k)
-    )
+    return brute_topk(scatter(corpus), queries, id_col, vec_col, k)
 
 
 def brute_force_topk_sql(
@@ -241,15 +204,6 @@ def plane_dots_expr(vec_col: str, n_planes_total: int, dim: int) -> str:
     )
 
 
-def bucket_signature(
-    df: DataFrame, id_col: str, vec_col: str, n_planes: int = 8, dim: int = 64
-) -> DataFrame:
-    """(id, bucket): one sign-LSH bucket per vector."""
-    return df.select(
-        F.col(id_col), bucket_sig_column(vec_col, n_planes, dim).alias("bucket")
-    )
-
-
 def bucket_sig_sql(vec_col: str, n_planes: int, plane_offset: int = 0) -> str:
     """SQL twin of ``bucket_sig_column`` (same planes via PLANE_SQL)."""
 
@@ -277,25 +231,19 @@ def lsh_topk(
     k: int = 10,
     n_planes: int = 8,
     dim: int = 64,
-    method: str | None = None,
 ) -> DataFrame:
     """ANN top-k within sign-LSH buckets: (query_id, neighbor_id, sim,
     rank) for every corpus vector as query, candidates limited to the
     same bucket. The scale path: bucket equi-join replaces the cross
     join; recall < 1 by construction.
 
-    Two bit-identical scorers (property-tested): ``"join"`` (default)
-    — the bucket self-join + per-pair cosine + per-query window;
-    ``"grouped"`` — one cosine matmul per bucket inside applyInPandas,
-    ranks computed in-group (similarity/scores.lsh_grouped_topk).
-    The r11 order-controlled A/B kept JOIN as the default: sign-LSH's
-    own design holds buckets SMALL (2^b buckets, ~n/2^b rows each), so
-    per-bucket matmuls are tiny while per-group pandas overhead is not
-    (join wins ~1.7x at n=2k, ties at 20k), and a degenerate dense
+    The scorer is the bucket self-join + per-pair cosine + per-query
+    window: sign-LSH's own design holds buckets SMALL (2^b buckets,
+    ~n/2^b rows each), so a per-bucket matmul saves little while
+    per-group pandas overhead does not shrink (the r11 A/B measured the
+    join ~1.7x faster at n=2k, a tie at 20k), and a degenerate dense
     bucket is better served by AQE skew-splitting the join than by one
-    long pandas task.  The grouped form is the right scorer only for
-    deliberately shallow signatures (few, large buckets — the SemDeDup
-    cell regime, where its twin is the measured 4.6x default)."""
+    long pandas task."""
     from hadoop_20_warehouse_spark.session import scatter
 
     # signature, vector, and norm in ONE projection (the join-with-sig
@@ -306,12 +254,6 @@ def lsh_topk(
         _norm(F.col(vec_col)).alias("nrm"),
         bucket_sig_column(vec_col, n_planes, dim).alias("bucket"),
     )
-    if method == "grouped":
-        from hadoop_20_warehouse_spark.similarity.scores import (
-            lsh_grouped_topk,
-        )
-
-        return lsh_grouped_topk(vecs, id_col, vec_col, k)
     a = vecs.select(
         F.col(id_col).alias("query_id"), F.col(vec_col).alias("qv"),
         F.col("nrm").alias("qn"), "bucket",

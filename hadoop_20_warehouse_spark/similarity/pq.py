@@ -336,62 +336,6 @@ QUALIFY rank <= {topk}
 # --- IVF-PQ: residual product quantization over IVF cells -------------------
 
 
-def _assign_with_centroid(
-    corpus: DataFrame,
-    cents: DataFrame,
-    id_col: str,
-    vec_col: str,
-    num_centroids: int | None = None,
-    method: str | None = None,
-) -> DataFrame:
-    """(id, cell_id, resid) — rank-1 cosine cell assignment AND the
-    residual (v − centroid) in ONE row-local projection: the centroid
-    table travels as a broadcast array row and array_min picks
-    (rounded-neg-cosine, cid, cv) structs, so the winning centroid's
-    VECTOR comes back from the same argmin — no id-keyed join between
-    assignment and residual (struct comparison never reaches the cv
-    field: (negsim, cid) is already unique).  JVM-side but interpreted
-    (HOFs break codegen); above the measured k crossover the same
-    assignment+residual dispatches to the Arrow-batched GEMM
-    (``similarity.assign.assign_topn(include_resid=True)`` —
-    bit-identical, see that module's equality argument)."""
-    from hadoop_20_warehouse_spark.similarity import assign as ASSIGN
-    from hadoop_20_warehouse_spark.similarity.ivf import (
-        _centroid_array,
-        _scorer,
-    )
-    from hadoop_20_warehouse_spark.similarity.knn import _norm
-
-    if method is None and num_centroids is not None:
-        method = (
-            "gemm" if num_centroids >= ASSIGN.GEMM_ASSIGN_MIN_K else "hof"
-        )
-    if method == "gemm":
-        return ASSIGN.assign_topn(
-            corpus, cents, id_col=id_col, vec_col=vec_col, nprobe=1,
-            include_resid=True,
-        ).select(
-            F.col(id_col), F.col("centroid_id").alias("cell_id"), "resid"
-        )
-    vecs = corpus.select(
-        F.col(id_col), F.col(vec_col), _norm(F.col(vec_col)).alias("vn")
-    )
-    best = F.array_min(
-        F.transform(
-            F.col("cs"), _scorer(F.col(vec_col), F.col("vn"), include_cv=True)
-        )
-    )
-    return vecs.crossJoin(F.broadcast(_centroid_array(cents))).select(
-        F.col(id_col),
-        best["cid"].alias("cell_id"),
-        F.zip_with(
-            F.col(vec_col),
-            best["cv"],
-            lambda x, y: x.cast("double") - y.cast("double"),
-        ).alias("resid"),
-    )
-
-
 def ivfpq_topk(
     corpus: DataFrame,
     query: DataFrame,
@@ -404,7 +348,6 @@ def ivfpq_topk(
     k_codes: int = DEFAULT_K,
     dim: int = 64,
     topk: int = 20,
-    method: str | None = None,
     codebook: str = "sampled",
     iters: int = 2,
 ) -> DataFrame:
@@ -431,9 +374,9 @@ def ivfpq_topk(
     integer-Lloyd residual codebook + micro-unit integer distances),
     so the DuckDB oracle reproduces the full pipeline exactly — see
     ivfpq_topk_sql / ivfpq_trained_sql."""
-    from hadoop_20_warehouse_spark.similarity.ivf import centroids
-
     from hadoop_20_warehouse_spark.session import persist_generation
+    from hadoop_20_warehouse_spark.similarity.assign import assign_topn
+    from hadoop_20_warehouse_spark.similarity.ivf import centroids
 
     cents = centroids(corpus, id_col, vec_col, num_centroids)
     # the assignment+residual projection feeds BOTH the codebook seed
@@ -444,10 +387,10 @@ def ivfpq_topk(
     # either way)
     assigned = persist_generation(
         "ivfpq_assigned",
-        _assign_with_centroid(
-            corpus, cents, id_col, vec_col,
-            num_centroids=num_centroids, method=method,
-        ),
+        assign_topn(
+            corpus, cents, id_col=id_col, vec_col=vec_col, nprobe=1,
+            include_resid=True,
+        ).select(F.col(id_col), F.col("centroid_id").alias("cell_id"), "resid"),
     )
     if codebook == "trained":
         cb = pq_train_codebook(
@@ -464,41 +407,11 @@ def ivfpq_topk(
     )
     # the query's nprobe cells + per-cell query residuals (row-local)
     sub = dim // m
-    from hadoop_20_warehouse_spark.similarity.ivf import (
-        _centroid_array,
-        _scorer,
-    )
-    from hadoop_20_warehouse_spark.similarity.knn import _norm
-
-    qprobes = (
-        query.select(F.col(qvec_col), _norm(F.col(qvec_col)).alias("qn"))
-        .crossJoin(F.broadcast(_centroid_array(cents)))
-        .select(
-            F.explode(
-                F.slice(
-                    F.array_sort(
-                        F.transform(
-                            F.col("cs"),
-                            _scorer(
-                                F.col(qvec_col), F.col("qn"), include_cv=True
-                            ),
-                        )
-                    ),
-                    1,
-                    nprobe,
-                )
-            ).alias("p"),
-            F.col(qvec_col),
-        )
-        .select(
-            F.col("p")["cid"].alias("cell_id"),
-            F.zip_with(
-                F.col(qvec_col),
-                F.col("p")["cv"],
-                lambda x, y: x.cast("double") - y.cast("double"),
-            ).alias("qres"),
-        )
-    )
+    qprobes = assign_topn(
+        query.select(F.lit(0).alias("_qid"), F.col(qvec_col)),
+        cents, id_col="_qid", vec_col=qvec_col, nprobe=nprobe,
+        include_resid=True,
+    ).select(F.col("centroid_id").alias("cell_id"), F.col("resid").alias("qres"))
     d = _sqdist_u_sql_spark(f"slice(qres, s * {sub} + 1, {sub})", "cv")
     lut = qprobes.crossJoin(F.broadcast(cb)).select(
         "cell_id",

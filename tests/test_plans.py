@@ -597,3 +597,13 @@ def test_cdc_merge_plan_partial_agg_no_window(spark, sf_dir):
     assert "partial_max" in plan or "HashAggregate" in plan
     # untouched rows split off via a real anti join
     assert "LeftAnti" in plan
+
+
+def test_ivf_trained_assignment_is_executed(spark, sf_dir):
+    """knn_ivf_trained's n_vectors must be computed FROM the rank-1
+    assignment of the corpus: the assign's MapInPandas has to survive
+    into the executed plan (a column-projection argmin whose output
+    only feeds a row count is pruned by Catalyst)."""
+    df = QUERIES["knn_ivf_trained"](spark, sf_dir)
+    plan = physical_plan(df)
+    assert "MapInPandas" in plan, plan

@@ -457,27 +457,29 @@ def test_embedding_group_centroid_matches_numpy(spark, emb):
 
 
 # ---------------------------------------------------------------------------
-# GEMM-batched centroid assignment (similarity/assign.py): bit-identity
-# with the HOF argmin is the load-bearing property — the DuckDB oracles
-# hash downstream results, so the two physical strategies must agree on
-# every row, including rounding-boundary ties, exact-duplicate vectors,
-# and NULL cosines (zero norms).
+# Vector kernels vs their DuckDB oracles on adversarial inputs: the
+# batched assign/scoring kernels (similarity/assign.py, scores.py,
+# dedup/semantic.py) must reproduce the oracles' rounded-cosine
+# rankings on every row, including rounding-boundary ties,
+# exact-duplicate vectors, and NULL cosines (zero norms).
 
 
 @pytest.fixture(scope="module")
-def adversarial_vecs(spark):
+def adversarial_vecs(spark, duck):
     """400 synthetic doubles: every 17th is all-zero (NULL cosine),
-    every 5th duplicates another id's vector exactly (rounded-cosine
-    ties → centroid-id tiebreaks), the rest carry ±1e-9 perturbations
-    (forces the GEMM path's exact tie-band recompute)."""
-    return spark.range(400).select(
+    every 5th copies the base vector of id + 1, which carries a
+    (id + 1) % 3 · 1e-9 offset — so the pair is an exact duplicate
+    (rounded-cosine ties → id tiebreaks) or a 1e-9 near-duplicate
+    (forces the kernels' exact tie-band recompute).  Registered in the
+    DuckDB connection as ``adversarial_vecs``."""
+    df = spark.range(400).select(
         F.col("id").alias("vec_id"),
         F.expr(
             """
             CASE
               WHEN id % 17 = 0 THEN transform(sequence(1,64), j -> 0.0D)
               WHEN id % 5 = 0 THEN transform(sequence(1,64), j ->
-                cast(conv(substr(md5(concat(cast(cast(id/5 as bigint)*5 as string),
+                cast(conv(substr(md5(concat(cast(id + 1 as string),
                   chr(35), cast(j as string))),1,8),16,10) as double)/2147483648.0 - 1.0)
               ELSE transform(sequence(1,64), j ->
                 cast(conv(substr(md5(concat(cast(id as string), chr(35),
@@ -486,37 +488,138 @@ def adversarial_vecs(spark):
             END"""
         ).alias("embedding"),
     ).cache()
+    duck.register("adversarial_vecs", df.toPandas())
+    return df
 
 
-@pytest.mark.parametrize("k,nprobe", [(8, 1), (32, 2), (16, 5), (64, 3)])
-def test_gemm_assign_matches_hof_on_real_embeddings(spark, emb, k, nprobe):
-    h = IVF._cells(emb, "vec_id", "embedding", k, nprobe, method="hof")
-    g = IVF._cells(emb, "vec_id", "embedding", k, nprobe, method="gemm")
-    assert sorted(map(tuple, h.collect())) == sorted(map(tuple, g.collect()))
+def _md5_last_query(df):
+    """The IVF-PQ oracles' query: the md5-largest vector."""
+    return (
+        df.select(
+            F.col("embedding").alias("qv"),
+            F.md5(F.col("vec_id").cast("string")).alias("h"),
+            "vec_id",
+        )
+        .orderBy(F.desc("h"), F.desc("vec_id"))
+        .limit(1)
+        .select("qv")
+    )
 
 
-@pytest.mark.parametrize("k,nprobe", [(8, 1), (50, 2), (64, 4)])
-def test_gemm_assign_matches_hof_adversarial(spark, adversarial_vecs, k, nprobe):
-    h = IVF._cells(adversarial_vecs, "vec_id", "embedding", k, nprobe, method="hof")
-    g = IVF._cells(adversarial_vecs, "vec_id", "embedding", k, nprobe, method="gemm")
-    assert sorted(map(tuple, h.collect())) == sorted(map(tuple, g.collect()))
-
-
-def test_gemm_resid_matches_hof(spark, adversarial_vecs):
-    """The IVF-PQ assignment+residual path: winner AND the exact
-    (v − centroid) doubles must agree element-for-element."""
+def _oracle_cases():
+    from hadoop_20_warehouse_spark.dedup import semantic as SEM
+    from hadoop_20_warehouse_spark.similarity import knn as KNN
     from hadoop_20_warehouse_spark.similarity import pq as PQ
 
-    cents = IVF.centroids(adversarial_vecs, "vec_id", "embedding", 24)
-    h = PQ._assign_with_centroid(
-        adversarial_vecs, cents, "vec_id", "embedding", method="hof"
+    adv, real = "adversarial_vecs", "embeddings"
+    cases = {
+        f"ivf_topk-{k}-{nprobe}": (
+            adv,
+            lambda df, k=k, nprobe=nprobe: IVF.ivf_topk(
+                df, k=5, num_centroids=k, nprobe=nprobe
+            ),
+            IVF.ivf_topk_sql(adv, k=5, num_centroids=k, nprobe=nprobe),
+        )
+        for k, nprobe in [(8, 1), (50, 2), (64, 4)]
+    }
+    cases.update(
+        {
+            f"ivfpq_topk-{cells}": (
+                adv,
+                lambda df, cells=cells: PQ.ivfpq_topk(
+                    df, _md5_last_query(df), num_centroids=cells
+                ),
+                PQ.ivfpq_topk_sql(adv, num_centroids=cells),
+            )
+            for cells in (8, 24)
+        }
     )
-    g = PQ._assign_with_centroid(
-        adversarial_vecs, cents, "vec_id", "embedding", method="gemm"
+    cases["semantic-24-0.3"] = (
+        adv,
+        lambda df: SEM.semantic_dedup_removed(df, num_cells=24, threshold=0.3),
+        SEM.semantic_dedup_removed_sql(adv, num_cells=24, threshold=0.3),
     )
-    hk = sorted((r["vec_id"], r["cell_id"], tuple(r["resid"])) for r in h.collect())
-    gk = sorted((r["vec_id"], r["cell_id"], tuple(r["resid"])) for r in g.collect())
-    assert hk == gk
+    cases["semantic_emb-8-0.2"] = (
+        real,
+        lambda df: SEM.semantic_dedup_removed(df, num_cells=8, threshold=0.2),
+        SEM.semantic_dedup_removed_sql(real, num_cells=8, threshold=0.2),
+    )
+    cases["brute_force_topk"] = (
+        adv,
+        lambda df: KNN.brute_force_topk(
+            df, df.filter(F.expr("vec_id % 4 = 0")), k=5
+        ),
+        KNN.brute_force_topk_sql(adv, "vec_id % 4 = 0", k=5),
+    )
+    cases["lsh_topk"] = (
+        adv,
+        lambda df: KNN.lsh_topk(df, k=4),
+        KNN.lsh_topk_sql(adv, k=4),
+    )
+    cases["embedding_near_dup_pairs"] = (
+        adv,
+        lambda df: EMB.embedding_near_dup_pairs(df, threshold=0.3),
+        EMB.embedding_near_dup_pairs_sql(adv, threshold=0.3),
+    )
+    return cases
+
+
+_ORACLE_CASES = _oracle_cases()
+
+
+@pytest.mark.parametrize("case", sorted(_ORACLE_CASES))
+def test_vector_kernel_matches_oracle(case, spark, duck, emb, adversarial_vecs):
+    from tests.conftest import assert_matches_oracle
+
+    table, build, sql = _ORACLE_CASES[case]
+    df = adversarial_vecs if table == "adversarial_vecs" else emb
+    assert_matches_oracle(build(df), duck, sql)
+
+
+def test_train_centroids_matches_lloyd_reference(spark, emb, duck):
+    """One Lloyd round pinned against DuckDB: the rank-1 cell exactly
+    as the IVF oracle's ``cellranks``, then round(avg(x), 6) per
+    (cell, dim) — exact equality, centroid norms included."""
+    from hadoop_20_warehouse_spark.similarity.knn import cosine_sql
+
+    got = sorted(
+        (r["centroid_id"], list(r["cv"]), r["cn"])
+        for r in IVF.train_centroids(emb, k=16, iters=1).collect()
+    )
+    ccos = cosine_sql("v.v", "c.cv")
+    want = duck.sql(
+        f"""
+WITH cents AS (
+  SELECT vec_id AS centroid_id, embedding AS cv FROM embeddings
+  ORDER BY md5(CAST(vec_id AS VARCHAR)), vec_id LIMIT 16
+),
+v AS (SELECT vec_id AS id, embedding AS v FROM embeddings),
+cellranks AS (
+  SELECT id, centroid_id,
+         ROW_NUMBER() OVER (
+           PARTITION BY id ORDER BY round({ccos}, 6) DESC, centroid_id ASC
+         ) AS crank
+  FROM v CROSS JOIN cents c
+),
+dims AS (
+  SELECT cr.centroid_id, generate_subscripts(v.v, 1) AS pos,
+         unnest(v.v) AS x
+  FROM cellranks cr JOIN v USING (id) WHERE cr.crank = 1
+),
+means AS (
+  SELECT centroid_id, pos, round(avg(CAST(x AS DOUBLE)), 6) AS m
+  FROM dims GROUP BY centroid_id, pos
+),
+newc AS (
+  SELECT centroid_id, list(m ORDER BY pos) AS cv FROM means
+  GROUP BY centroid_id
+)
+SELECT centroid_id, cv,
+       sqrt(list_sum(list_transform(cv, x -> x * x))) AS cn
+FROM newc ORDER BY centroid_id
+"""
+    ).fetchall()
+    assert got == sorted((cid, list(cv), cn) for cid, cv, cn in want)
 
 
 def test_round6_scaled_matches_spark_round(spark, emb):
@@ -550,88 +653,6 @@ def test_round6_scaled_matches_spark_round(spark, emb):
         got = _round6_scaled(lit)
         want = spark.sql(f"SELECT round({lit!r}D, 6) AS r").collect()[0]["r"]
         assert got == round(want * 1e6), lit
-
-
-def test_train_centroids_gemm_matches_hof(spark, emb):
-    h = IVF.train_centroids(emb, k=16, iters=2, method="hof")
-    g = IVF.train_centroids(emb, k=16, iters=2, method="gemm")
-    hk = sorted((r["centroid_id"], tuple(r["cv"]), r["cn"]) for r in h.collect())
-    gk = sorted((r["centroid_id"], tuple(r["cv"]), r["cn"]) for r in g.collect())
-    assert hk == gk
-
-
-@pytest.mark.parametrize("cells,tau", [(32, 0.35), (8, 0.2)])
-def test_semantic_pairs_grouped_matches_join(spark, emb, cells, tau):
-    """The per-cell-GEMM pairwise stage must reproduce the self-join
-    form exactly — including the emitted rounded sim doubles, which
-    the oracle hashes."""
-    from hadoop_20_warehouse_spark.dedup import semantic as SEM
-
-    j = SEM.semantic_dedup_removed(
-        emb, num_cells=cells, threshold=tau, pair_method="join"
-    )
-    g = SEM.semantic_dedup_removed(
-        emb, num_cells=cells, threshold=tau, pair_method="grouped"
-    )
-    assert sorted(map(tuple, j.collect())) == sorted(map(tuple, g.collect()))
-
-
-def test_semantic_pairs_grouped_matches_join_adversarial(
-    spark, adversarial_vecs
-):
-    from hadoop_20_warehouse_spark.dedup import semantic as SEM
-
-    j = SEM.semantic_dedup_removed(
-        adversarial_vecs, num_cells=24, threshold=0.3, pair_method="join"
-    )
-    g = SEM.semantic_dedup_removed(
-        adversarial_vecs, num_cells=24, threshold=0.3, pair_method="grouped"
-    )
-    assert sorted(map(tuple, j.collect())) == sorted(map(tuple, g.collect()))
-
-
-# ---------------------------------------------------------------------------
-# Batched scoring kernels (similarity/scores.py) vs their HOF forms
-
-
-def test_plane_signs_matches_hof(spark, emb, adversarial_vecs):
-    from hadoop_20_warehouse_spark.similarity import scores as SC
-
-    for df in (emb, adversarial_vecs):
-        h = EMB.sign_buckets(df, "vec_id", "embedding", 4, 8, 64, method="hof")
-        g = SC.plane_signs(df, "vec_id", "embedding", 4, 8, 64)
-        assert sorted(map(tuple, h.collect())) == sorted(map(tuple, g.collect()))
-
-
-def test_brute_topk_gemm_matches_hof(spark, emb, adversarial_vecs):
-    """Includes the NULL-cosine tail: the adversarial frame's zero
-    vectors produce all-NULL queries whose top-k is the NULLS-LAST
-    neighbor-id order."""
-    from hadoop_20_warehouse_spark.similarity import scores as SC
-
-    for df in (emb, adversarial_vecs):
-        q = df.filter(F.expr("vec_id % 50 = 0"))
-        h = brute_force_topk(df, q, k=5, method="hof")
-        g = SC.brute_topk(df, q, "vec_id", "embedding", 5)
-        assert sorted(map(tuple, h.collect())) == sorted(map(tuple, g.collect()))
-
-
-def test_pairs_threshold_gemm_matches_hof(spark, emb, adversarial_vecs):
-    from hadoop_20_warehouse_spark.similarity import scores as SC
-
-    for df, tau in ((emb, 0.3), (adversarial_vecs, 0.3)):
-        h = EMB.brute_force_pairs(df, threshold=tau, method="hof")
-        g = SC.pairs_threshold(df, "vec_id", "embedding", tau)
-        assert sorted(map(tuple, h.collect())) == sorted(map(tuple, g.collect()))
-
-
-def test_lsh_grouped_matches_join(spark, emb, adversarial_vecs):
-    from hadoop_20_warehouse_spark.similarity.knn import lsh_topk
-
-    for df, k in ((emb, 5), (adversarial_vecs, 4)):
-        j = lsh_topk(df, k=k, method="join")
-        g = lsh_topk(df, k=k, method="grouped")
-        assert sorted(map(tuple, j.collect())) == sorted(map(tuple, g.collect()))
 
 
 def test_pq_trained_codebook_improves_quantization(spark, emb):
@@ -683,68 +704,46 @@ def test_gemm_kernels_degenerate_inputs(spark, emb):
 
 
 def test_gemm_collect_caps_enforced(spark, emb, monkeypatch):
-    """Both driver-side collects in the GEMM yardsticks are bounded by
-    contract AND enforcement (VERDICT r12 finding 1): above the cap
-    the collect raises with an actionable message instead of silently
-    pressuring driver memory.  Caps are module constants precisely so
-    this is testable without materializing a million rows."""
+    """The brute scorer's driver-side query collect is bounded by
+    contract AND enforcement (VERDICT r12 finding 1): above the cap the
+    collect raises with an actionable message instead of silently
+    pressuring driver memory.  The cap is a module constant precisely
+    so this is testable without materializing a million rows."""
     from hadoop_20_warehouse_spark.similarity import scores as SC
 
     monkeypatch.setattr(SC, "MAX_QUERY_ROWS", 10)
-    monkeypatch.setattr(SC, "MAX_CORPUS_ROWS", 10)
     big_q = emb.limit(11)
     with pytest.raises(ValueError, match="query set exceeds 10 rows"):
         SC.brute_topk(emb, big_q, "vec_id", "embedding", 5)
-    with pytest.raises(ValueError, match="corpus exceeds 10 rows"):
-        SC.pairs_threshold(emb, "vec_id", "embedding", 0.3)
-    # at or below the cap both run normally
+    # at or below the cap it runs normally
     monkeypatch.setattr(SC, "MAX_QUERY_ROWS", 10_000)
-    monkeypatch.setattr(SC, "MAX_CORPUS_ROWS", 10_000)
     assert SC.brute_topk(emb, big_q, "vec_id", "embedding", 2).count() > 0
-    assert (
-        SC.pairs_threshold(emb.limit(20), "vec_id", "embedding", 0.99)
-        .count()
-        >= 0
-    )
 
 
 def test_gemm_chunked_passes_match_single(spark, emb, monkeypatch):
     """VERDICT r14 #6: the chunked multi-pass escape hatch must equal
-    the single-pass GEMM form exactly — disjoint md5 query slices for
-    brute_topk, broadcast-side corpus slices for pairs_threshold (each
-    unordered pair emitted once, by the slice holding its right
-    member)."""
+    the single-pass form exactly — disjoint md5 query slices, each
+    query's top-k computed within its own slice."""
     from hadoop_20_warehouse_spark.similarity import scores as SC
 
     df = emb.limit(120)
     q = df.filter(F.expr("vec_id % 10 = 0"))
-    single_t = SC.brute_topk(df, q, "vec_id", "embedding", 4)
+    single_t = sorted(
+        map(tuple, SC.brute_topk(df, q, "vec_id", "embedding", 4).collect())
+    )
     multi_t = SC.brute_topk(
         df, q, "vec_id", "embedding", 4, chunked=True, n_passes=3
     )
-    assert sorted(map(tuple, single_t.collect())) == sorted(
-        map(tuple, multi_t.collect())
-    )
-    single_p = SC.pairs_threshold(df, "vec_id", "embedding", 0.3)
-    multi_p = SC.pairs_threshold(
-        df, "vec_id", "embedding", 0.3, chunked=True, n_passes=3
-    )
-    assert sorted(map(tuple, single_p.collect())) == sorted(
-        map(tuple, multi_p.collect())
-    )
-    # derived pass count: a corpus above the (lowered) cap no longer
+    assert single_t == sorted(map(tuple, multi_t.collect()))
+    # derived pass count: a query set above the (lowered) cap no longer
     # raises on the chunked path — it splits into enough passes that
     # each collect stays bounded — and still matches single-pass
-    monkeypatch.setattr(SC, "MAX_CORPUS_ROWS", 25)
-    auto_p = SC.pairs_threshold(
-        df, "vec_id", "embedding", 0.3, chunked=True
-    )
-    assert sorted(map(tuple, single_p.collect())) == sorted(
-        map(tuple, auto_p.collect())
-    )
+    monkeypatch.setattr(SC, "MAX_QUERY_ROWS", 5)
+    auto_t = SC.brute_topk(df, q, "vec_id", "embedding", 4, chunked=True)
+    assert single_t == sorted(map(tuple, auto_t.collect()))
     with pytest.raises(ValueError, match="n_passes must be >= 1"):
-        SC.pairs_threshold(
-            df, "vec_id", "embedding", 0.3, chunked=True, n_passes=0
+        SC.brute_topk(
+            df, q, "vec_id", "embedding", 4, chunked=True, n_passes=0
         )
 
 
